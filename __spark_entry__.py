@@ -151,28 +151,25 @@ def q_rollup_retract_events(spark, sf_dir):
     """GDPR retraction on the continuous aggregate (round 6,
     operators/rollup.retract_from_rollup): roll up the FULL events
     series, then retract every event whose epoch-second % 7 == 3 —
-    ~1/7 of rows scattered INSIDE buckets, so plenty of bucket extrema
-    sit on deleted rows and the footprint-pruned recompute actually
-    runs. The result must equal the tier rollup over the retained rows
-    (oracle: the rollup SQL with the deletion predicate inverted):
-    decomposables subtract, extrema recompute only where a deleted row
-    achieved them — base tier from retained raw semi-joined to the
-    affected buckets, coarser tiers from the adjusted base partials."""
+    ~1/7 of rows scattered INSIDE buckets, so the delete's footprint
+    touches most (user, coarsest-tier bucket) pairs and the re-roll
+    does real work. The result must equal the tier rollup over the
+    retained rows (oracle: the rollup SQL with the deletion predicate
+    inverted): rollup rows inside the footprint are anti-joined out and
+    re-rolled from the retained rows semi-joined to that footprint."""
     from light_curve_spark.operators.rollup import (
         retract_from_rollup,
         rollup_tiers,
     )
 
-    from light_curve_spark.plans.caching import cached
     from light_curve_spark.plans.salting import ensure_min_splits
 
-    # the series feeds THREE consumers (full rollup, deleted partials,
-    # retained extrema rescan); uncached each re-reads the single-row-
-    # group parquet serially and repeats the epoch projection (round 7,
-    # guide §5: reuse justifies the persist — a retraction deployment
-    # materializes the retained/deleted split rather than scanning raw
-    # three times). ensure_min_splits parallelizes the one real pass.
-    series = cached(ensure_min_splits(_events_series(spark, sf_dir)))
+    # the series feeds THREE consumers (full rollup, delete footprint,
+    # retained re-roll); ensure_min_splits parallelizes the scan. Not
+    # cached(): a cached input defeats AQE exchange reuse, so the
+    # footprint's shuffle + broadcast re-ran in every union branch —
+    # 21 jobs per warm rep cached vs 10 uncached (sf0.1, local[4]).
+    series = ensure_min_splits(_events_series(spark, sf_dir))
     cond = (
         F.pmod(F.floor(F.col("t") / F.lit(1e6)).cast("long"), F.lit(7)) == 3
     )

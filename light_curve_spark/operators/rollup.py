@@ -124,6 +124,18 @@ def rollup_tiers(
     )
 
 
+def null_safe_join(df: DataFrame, other: DataFrame, cols: list[str], how: str) -> DataFrame:
+    """Join ``df`` to the broadcast ``other`` on ``cols`` with NULL
+    matching NULL (``eqNullSafe``): rollup key columns such as ``source``
+    are nullable, and a plain equi-join would let a NULL-keyed row slip
+    past a retraction. Catalyst still plans it as a hash join."""
+    o = other.select(*[F.col(c).alias(f"_o_{c}") for c in cols])
+    cond = reduce(
+        lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"_o_{c}")) for c in cols]
+    )
+    return df.join(F.broadcast(o), cond, how)
+
+
 def retract_from_rollup(
     rollup: DataFrame,
     deleted: DataFrame,
@@ -134,135 +146,55 @@ def retract_from_rollup(
 ) -> DataFrame:
     """Remove DELETED raw events from an already-computed tier rollup —
     the continuous-aggregate side of the right-to-be-forgotten surface
-    (round 6; the dedup/vector twins are the tombstone operators). The
-    result EQUALS ``rollup_tiers(retained, ...)`` (pytest + SQL oracle)
-    without re-rolling the corpus:
+    (the dedup/vector twins are the tombstone operators). The result
+    EQUALS ``rollup_tiers(retained, ...)`` (pytest + SQL oracle) by a
+    footprint re-roll:
 
-    - decomposable stats subtract: the deleted rows' own tier partials
-      (one ``rollup_tiers`` over just the deleted rows — tiny, AQE
-      broadcasts it) come off ``n_points``/``v_sum``; emptied buckets
-      drop;
-    - extrema cannot subtract: a bucket needs its min (max) recomputed
-      ONLY when a deleted row achieved it (``deleted_min <= v_min``) —
-      everywhere else the stored extremum stands. The base tier
-      recomputes from ``retained`` raw SEMI-JOINED to exactly the
-      affected buckets (the 100 TB posture: the raw rescan is bounded
-      by the delete's bucket footprint, and partition pruning on time
-      keeps it to those ranges); every coarser tier recomputes from the
-      already-ADJUSTED base-tier partials, never from raw — a tier-T
-      extremum is the min/max over its surviving tier-1 children.
+    - the delete's footprint is the distinct (keys, coarsest-tier
+      bucket) pairs of the deleted rows; every tier bucket nests in
+      exactly one coarsest bucket, its ancestor
+      ``floor(bucket / (tiers[-1] // tier))``;
+    - rollup rows whose ancestor is in the footprint are anti-joined
+      out; everywhere else no deleted row contributed, so the stored
+      partials already equal the retained rollup;
+    - ``rollup_tiers`` over ``retained`` SEMI-JOINED to the footprint
+      replaces them. The re-roll is bounded by the delete's
+      coarsest-tier footprint (base_width * tiers[-1] of ``t`` per
+      bucket), never the corpus: rows outside it never reach it.
 
-    ``rollup`` must carry the ``rollup_tiers`` row shape (a ``v_mean``
-    column is ignored and re-derived); ``retained`` is the raw series
-    minus ``deleted``, in the same long form the rollup was built
-    from.
-
-    Float tolerance (round-6 ADVICE low): ``v_sum`` is computed by
-    SUBTRACTION (stored sum minus the deleted rows' partials), while
-    ``rollup_tiers(retained)`` re-adds the retained rows — floating-point
-    non-associativity means the two can diverge up to the cancellation
-    error of the bucket's sum, i.e. ~|v_sum_stored| * 2^-52 amplified by
-    how much of the bucket's mass was deleted. Equality with a re-roll is
-    therefore exact for ``n_points``/``v_min``/``v_max`` and holds for
-    ``v_sum``/``v_mean`` to within that cancellation bound (well under
-    the oracle's 1e-6 rounding unless a delete cancels nearly all of a
-    large-magnitude bucket); deployments deleting most of a high-|sum|
-    bucket should re-roll those buckets from raw instead."""
-    from light_curve_spark.plans.caching import cached
-
+    Keys match null-safely. Sums are re-added from retained rows, not
+    subtracted, so ``v_sum`` carries no cancellation error. ``rollup``
+    must carry the ``rollup_tiers`` row shape (``v_mean`` is re-derived);
+    ``retained`` is the raw series minus ``deleted``, in the same long
+    form the rollup was built from."""
     keys = keys or ["doc_id", "source"]
-    on = [*keys, "tier", "bucket"]
-    # persist_intermediate=False (round 7): the deleted-rows rollup is
-    # small by construction (a delete's footprint), so re-deriving its
-    # cascade branches from the base aggregate is cheaper than the two
-    # blocking cache-materialization stages the default would insert —
-    # measured 18 s -> 11 s on the cold sf1.0 retraction query
-    d = (
-        rollup_tiers(deleted, keys, base_width, tiers, persist_intermediate=False)
-        .select(
-            *on,
-            F.col("n_points").alias("_dn"),
-            F.col("v_sum").alias("_dsum"),
-            F.col("v_min").alias("_dmin"),
-            F.col("v_max").alias("_dmax"),
-        )
+    coarsest = tiers[-1]
+    span = coarsest // tiers[0]
+    # same integer cascade as rollup_tiers, so boundaries agree exactly
+    anc = F.floor(bucketize("t", base_width * tiers[0]) / F.lit(span))
+    footprint = deleted.select(*keys, anc.alias("_anc")).distinct()
+    kept = null_safe_join(
+        rollup.withColumn(
+            "_anc", F.floor(F.col("bucket") / (F.lit(coarsest) / F.col("tier")))
+        ),
+        footprint,
+        [*keys, "_anc"],
+        "left_anti",
     )
-    adj = (
-        rollup.drop("v_mean")
-        .join(d, on, "left")
-        .select(
-            *on,
-            (F.col("n_points") - F.coalesce("_dn", F.lit(0))).alias("n_points"),
-            (F.col("v_sum") - F.coalesce("_dsum", F.lit(0.0))).alias("v_sum"),
-            "v_min",
-            "v_max",
-            (
-                F.col("_dmin").isNotNull() & (F.col("_dmin") <= F.col("v_min"))
-            ).alias("_remin"),
-            (
-                F.col("_dmax").isNotNull() & (F.col("_dmax") >= F.col("v_max"))
-            ).alias("_remax"),
-        )
-        .filter(F.col("n_points") > 0)
+    reroll = rollup_tiers(
+        null_safe_join(
+            retained.withColumn("_anc", anc), footprint, [*keys, "_anc"], "left_semi"
+        ),
+        keys,
+        base_width,
+        tiers,
+        persist_intermediate=False,
     )
-    # consumed once per tier below plus the recompute prunes — cache so
-    # the rollup/deleted join runs once (session-scoped registry)
-    adj = cached(adj)
-
-    def _fix(tier_df: DataFrame, re_df: DataFrame) -> DataFrame:
-        """Swap recomputed extrema into the affected rows."""
-        return tier_df.join(re_df, on, "left").select(
-            *on,
-            "n_points",
-            "v_sum",
-            F.when(F.col("_remin"), F.col("_nmin"))
-            .otherwise(F.col("v_min"))
-            .alias("v_min"),
-            F.when(F.col("_remax"), F.col("_nmax"))
-            .otherwise(F.col("v_max"))
-            .alias("v_max"),
-        )
-
-    t1 = tiers[0]
-    aff1 = adj.filter(
-        (F.col("tier") == t1) & (F.col("_remin") | F.col("_remax"))
-    ).select(*keys, "bucket")
-    raw1 = retained.select(
-        *keys, bucketize("t", base_width * t1).alias("bucket"), "v"
-    ).join(aff1, [*keys, "bucket"], "left_semi")
-    re1 = (
-        raw1.groupBy(*keys, "bucket")
-        .agg(F.min("v").alias("_nmin"), F.max("v").alias("_nmax"))
-        .withColumn("tier", F.lit(t1))
-    )
-    fixed1 = cached(_fix(adj.filter(F.col("tier") == t1), re1))
-    out = [fixed1]
-    for t in tiers[1:]:
-        afft = adj.filter(
-            (F.col("tier") == t) & (F.col("_remin") | F.col("_remax"))
-        ).select(*keys, "bucket")
-        children = fixed1.select(
-            *keys,
-            F.floor(F.col("bucket") / F.lit(t // t1)).alias("bucket"),
-            "v_min",
-            "v_max",
-        ).join(afft, [*keys, "bucket"], "left_semi")
-        ret = (
-            children.groupBy(*keys, "bucket")
-            .agg(F.min("v_min").alias("_nmin"), F.max("v_max").alias("_nmax"))
-            .withColumn("tier", F.lit(t))
-        )
-        out.append(_fix(adj.filter(F.col("tier") == t), ret))
-    res = reduce(lambda a, b: a.unionByName(b), out)
-    return res.select(
-        *keys,
-        "tier",
-        "bucket",
-        "n_points",
-        "v_sum",
-        "v_min",
-        "v_max",
-        (F.col("v_sum") / F.col("n_points")).alias("v_mean"),
+    cols = [*keys, "tier", "bucket", *ROLLUP_AGG_COLS]
+    return (
+        kept.select(*cols)
+        .unionByName(reroll.select(*cols))
+        .withColumn("v_mean", F.col("v_sum") / F.col("n_points"))
     )
 
 

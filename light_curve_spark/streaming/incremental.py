@@ -7,11 +7,14 @@ over the union of partials — identical math to the tier cascade
 This is the batch twin of a streaming windowed aggregation: per new
 Iceberg snapshot the scheduler runs
 
-    new_partials = rollup_tiers(explode_series(new_rows))
+    new_partials = rollup_tiers_arrays(new_sequences)   # zero shuffle
     rollup_table = merge_rollups(rollup_table, new_partials)
 
-and appends the result — no state store, no watermark, exactly-once by
-snapshot id (the checkpoint records which input snapshots are folded).
+and appends the result — no state store, no watermark, no operator
+cache, exactly-once by snapshot id (the checkpoint records which input
+snapshots are folded). Deletes run the other way
+(:func:`retract_rollup_state`): whole keys are one broadcast anti-join,
+partial deletes re-roll only the delete's coarsest-tier footprint.
 """
 
 from __future__ import annotations
@@ -40,27 +43,26 @@ def incremental_rollup(
     spark,
     storage,
     new_rows: DataFrame,
-    keys: list[str] | None = None,
     base_width: float = 16.0,
     tiers: tuple[int, ...] = (1, 10, 100),
 ) -> str:
-    """Fold ``new_rows`` (sequences) into the stored rollup table and
-    append the merged result as a new snapshot; returns the snapshot id.
+    """Fold ``new_rows`` (sequences, keyed by ``(doc_id, source)``) into
+    the stored rollup table and append the merged result as a new
+    snapshot; returns the snapshot id. The batch's partials come from
+    the zero-shuffle array cascade, so ``base_width`` must be a positive
+    integer (a fractional one raises ``ValueError``).
 
     The merged table is written whole (rollup tables are ~10^6x smaller
     than raw at tier 100); at true 10^12 scale the write switches to a
     MERGE INTO on (key, tier, bucket), which Iceberg supports natively.
     """
-    from light_curve_spark.operators.rollup import rollup_tiers
-    from light_curve_spark.operators.series import explode_series
+    from light_curve_spark.operators.rollup import rollup_tiers_arrays
 
-    new_partials = rollup_tiers(
-        explode_series(new_rows), keys=keys, base_width=base_width, tiers=tiers
-    )
+    new_partials = rollup_tiers_arrays(new_rows, base_width=base_width, tiers=tiers)
     try:
         # each snapshot holds the FULL merged state -> read latest only
         existing = storage.read_snapshot("rollup_continuous")
-        merged = merge_rollups(existing, new_partials, keys=keys)
+        merged = merge_rollups(existing, new_partials)
     except ValueError:
         merged = new_partials
     return storage.append(merged, "rollup_continuous")
@@ -93,12 +95,13 @@ def retract_rollup_state(
     - ``retained`` given: both are LONG-FORM series (keys + t + v) and
       the partial-bucket math delegates to
       :func:`~light_curve_spark.operators.rollup.retract_from_rollup`
-      (decomposables subtract; extrema recompute only in the buckets a
-      deleted row topped, raw rescan bounded by that footprint).
+      (re-roll of the delete's coarsest-tier footprint only, raw rescan
+      bounded by that footprint).
 
-    The result equals ``rollup_tiers`` over the corpus without the
-    deleted data (pytest-gated both shapes)."""
-    from light_curve_spark.operators.rollup import retract_from_rollup
+    Keys match null-safely in both shapes (``source`` is nullable). The
+    result equals ``rollup_tiers`` over the corpus without the deleted
+    data (pytest-gated both shapes)."""
+    from light_curve_spark.operators.rollup import null_safe_join, retract_from_rollup
 
     keys = keys or ["doc_id", "source"]
     existing = storage.read_snapshot(table)
@@ -110,10 +113,8 @@ def retract_rollup_state(
                 "pass whole-key tuples, or long-form deleted+retained "
                 "series for partial-bucket retraction"
             )
-        reduced = existing.join(
-            F.broadcast(deleted.select(*join_cols).distinct()),
-            join_cols,
-            "left_anti",
+        reduced = null_safe_join(
+            existing, deleted.select(*join_cols).distinct(), join_cols, "left_anti"
         )
     else:
         reduced = retract_from_rollup(

@@ -1191,11 +1191,10 @@ def test_tombstone_vectors_refuses_pipeline_sem_prefix(spark, tmp_path):
 
 
 def test_retract_from_rollup_equals_reduced_rollup(spark):
-    """retract_from_rollup == rollup_tiers(retained) across every
-    delete pattern that exercises a distinct code path: a bucket's min,
-    a bucket's max, both extrema, non-extremum rows (no recompute), an
-    entire bucket (row drops), an entire key, and rows whose removal
-    must propagate a new extremum into the coarser tiers."""
+    """retract_from_rollup == rollup_tiers(retained) across delete
+    patterns: a bucket's min, a bucket's max, both extrema, non-extremum
+    rows, an entire bucket (row drops), an entire key, and rows whose
+    removal must propagate a new extremum into the coarser tiers."""
     from light_curve_spark.operators.rollup import (
         retract_from_rollup,
         rollup_tiers,
